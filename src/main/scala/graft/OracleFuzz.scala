@@ -175,6 +175,15 @@ object OracleFuzz {
       (s"lags=$lags fh=$fh alpha=$alpha l1=$l1 sweeps=$sweeps",
         FuzzBuilders.fcElasticNet(lags, fh, alpha, l1, sweeps))
     }),
+    Family("fc_knn", gen = { r =>
+      val lags = pick(r, range(2, 12)); val k = pick(r, range(1, 9))
+      (s"lags=$lags k=$k", FuzzBuilders.fcKnn(lags, k))
+    }),
+    Family("fc_knn_recursive", gen = { r =>
+      val lags = pick(r, range(2, 12)); val k = pick(r, range(1, 9))
+      val fh = pick(r, range(1, 4))
+      (s"lags=$lags k=$k fh=$fh", FuzzBuilders.fcKnnRecursive(lags, k, fh))
+    }),
     Family("s_cosine_topk", gen = { r =>
       val nq = pick(r, range(2, 20)); val k = pick(r, range(1, 10))
       (s"nQueries=$nq k=$k", FuzzBuilders.cosineTopK(nq, k))

@@ -15,10 +15,12 @@ import org.apache.spark.sql.types._
   * default). The scan is corpus-bound, not query-bound: one pass
   * serves any number of query groups at ~the same cost. So this
   * runner unions every (member × CV-slice) context's transformed
-  * reduction into ONE cached frame tagged `__grp`, and each horizon
+  * reduction into ONE cached [[KnnScan]] leaf index grouped by
+  * context (`__grp`), and each horizon
   * step advances ALL active contexts with a single
-  * [[KnnForecaster.heapPassMulti]] scan + one rank-merge + one
-  * entity-sized collect — max(testSize, fh) scan jobs total.
+  * [[KnnForecaster.heapPassMultiMerged]] scan + one distributed top-k
+  * combine + one entity-sized collect — max(testSize, fh) scan jobs
+  * total.
   *
   * Semantics are exactly the per-member exact path's
   * ([[KnnForecaster.predictRecursive]] under [[Conformal.backtest]]
@@ -67,7 +69,7 @@ object EliteKnnBatch {
     releases += positioned
     val splits = CrossValidation.expandingWindowSplit(p, testSize, nSplits,
       stepSize, Some(positioned))
-    // heapPassMulti's inner fold is lags-wide and its heaps k-deep —
+    // heapPassMultiMerged's inner fold is lags-wide and its heaps k-deep —
     // members sharing (lags, k) share one scan; mixed-depth zoos run
     // one sub-batch per depth (each still collapses its own
     // nSplits·testSize + fh per-slice scans to max(testSize, fh))
@@ -75,17 +77,6 @@ object EliteKnnBatch {
       runBatch(p, timeCol, freq, ms, splits, testSize, fh, lags, k, releases,
         corpusFraction)
     }.toMap
-  }
-
-  private val debug = sys.env.contains("GRAFT_KNN_BATCH_DEBUG")
-  @inline private def timed[T](what: String)(f: => T): T = {
-    if (!debug) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[knnbatch] $what: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
   }
 
   private def runBatch(p: Panel, timeCol: String, freq: String,
@@ -134,12 +125,29 @@ object EliteKnnBatch {
         .select((featureCols.map(cn => col(cn).cast("double")) :+
           col(p.value).cast("double").as("__label") :+
           lit(g).as("__grp")): _*)
-    }.reduce(_ unionAll _).coalesce(nPart).cache()
+    }.reduce(_ unionAll _).coalesce(nPart)
+    // the union's leaf index, grouped by context: built once, probed
+    // every step (finished contexts have no queries, so their leaves
+    // are never visited)
+    val index = KnnScan.index(redUnion, lags, KnnScan.GroupColumn)
+      .setName(s"knn batch leaf index (lags=$lags, k=$k)")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    // the fan-outs below run on a pool this call owns: this method runs
+    // inside the zoo's member futures on the global pool, where sibling
+    // members block on EliteDeep's lazy batch result without managed
+    // blocking — futures queued on the global pool from here could
+    // then never start (observed as a hang at sf0.1 on 4 cores)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(ctxs.length, ms.length))
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutorService(pool)
     try {
-      // one job: materializes the cached union AND yields the
+      // one job: materializes the cached index AND yields the
       // per-context non-empty check predictRecursive makes per roll
-      val grpCounts = timed("union-materialize")(redUnion.groupBy("__grp").count().collect())
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      val grpCounts = index.mapPartitions { segs =>
+        val m = scala.collection.mutable.Map.empty[Int, Long].withDefaultValue(0L)
+        segs.foreach(seg => seg.grpIds.indices.foreach(g => m(seg.grpIds(g)) += seg.groupRows(g)))
+        Iterator(m.toMap)
+      }.collect().flatten.groupMapReduce(_._1)(_._2)(_ + _)
       withGrp.foreach { case (c, g) =>
         require(grpCounts.getOrElse(g, 0L) > 0L,
           s"knn batch: member ${c.m.name}, split ${c.split} has no " +
@@ -154,9 +162,8 @@ object EliteKnnBatch {
       // jobs, overlapped like the zoo's member futures
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
       val tails: Seq[(Int, StructType, Array[Row])] =
-        timed("tails")(Await.result(Future.sequence(withGrp.map { case (c, g) => Future {
+        Await.result(Future.sequence(withGrp.map { case (c, g) => Future {
           val keep = p.entityCols ++ (col("__cutoff") +:
             (1 to lags).map(l => col(s"${p.value}__lag_$l").cast("double")))
           val sel = KnnForecaster.queryTails(c.pT, timeCol, lags).select(keep: _*)
@@ -164,8 +171,8 @@ object EliteKnnBatch {
           KnnForecaster.guardExactEntities(collected.length.toLong,
             s"elite knn batch (${c.m.name}, split ${c.split})")
           (g, sel.schema, collected)
-        } }), Duration.Inf))
-      // transform caches served both reads (union materialized above,
+        } }), Duration.Inf)
+      // transform caches served both reads (index materialized above,
       // tails collected) — release before the roll
       ctxs.foreach(_.cachedT.foreach(_.unpersist(false)))
       // globally unique qids: per-group offsets over the tail counts
@@ -182,12 +189,7 @@ object EliteKnnBatch {
         val qRows = active.flatMap { g =>
           states(g).zipWithIndex.map { case (s, i) => (offsets(g) + i, g, s) }
         }.toArray
-        // skip finished groups' rows at the cache scan (codegen'd
-        // filter over the columnar cache — no Row conversion for them)
-        val scan = if (active.length == ctxs.length) redUnion
-                   else redUnion.filter(col("__grp").isin(active.map(Integer.valueOf): _*))
-        val stepAvg = timed(s"step-$h")(
-          KnnForecaster.heapPassMultiMerged(scan, qRows, lags, k))
+        val stepAvg = KnnForecaster.heapPassMultiMerged(index, qRows, k)
         active.foreach { g =>
           states(g) = states(g).zipWithIndex.map { case (s, i) =>
             // every query MUST predict (its group is non-empty by the
@@ -225,7 +227,7 @@ object EliteKnnBatch {
           .select((p.entityCols ++ Seq(col(timeCol), col(p.value))): _*)
         c.inverts.reverse.foldLeft(out)((df, inv) => inv(df))
       }
-      timed("outputs")(Await.result(Future.sequence(ms.map { m => Future {
+      Await.result(Future.sequence(ms.map { m => Future {
         val mCtxs = withGrp.filter(_._1.m eq m)
         // Conformal.backtest's pred↔actual alignment, per split
         val btParts = mCtxs.filter(_._1.split >= 0).map { case (c, g) =>
@@ -250,7 +252,10 @@ object EliteKnnBatch {
         // member futures append concurrently — synchronize the buffer
         releases.synchronized { releases += bt; releases += full }
         m.name -> (bt, full)
-      } }), Duration.Inf))
-    } finally redUnion.unpersist(blocking = false)
+      } }), Duration.Inf)
+    } finally {
+      pool.shutdown()
+      index.unpersist(blocking = false)
+    }
   }
 }

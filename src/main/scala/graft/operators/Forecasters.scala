@@ -99,8 +99,10 @@ object Forecasters {
    * ensemble / exog) and KnnForecaster.queryTails: the copies are
    * DELIBERATE — each site's completeness filter and carried columns
    * differ subtly (null-state handling, __cutoff, extra lag columns),
-   * and a shared helper would have to parameterize all of it. Change
-   * one, check all. */
+   * and a shared helper would have to parameterize all of it. Only
+   * KNN drops NaN states too: a NaN query has no nearest rows, while
+   * the linear and tree forecasts of a NaN state are deterministic
+   * per entity. Change one, check all. */
   def predictRecursiveLinear(p: Panel, timeCol: String, fh: Int, freq: String,
                              intercept: Double, weights: Array[Double]): DataFrame = {
     val lags = weights.length

@@ -21,6 +21,20 @@ import org.apache.spark.sql.types._
   *    grouped top-k. Exact neighbors, matching the reference's sklearn
   *    semantics; one narrow shuffle.
   *
+  *    Every broadcast-query path (one-step, multi-k, recursive, IVF
+  *    one-step, the elite zoo's batch) scans through ONE kernel,
+  *    [[KnnScan]]: each partition's rows are split into kd leaves of
+  *    ≤ 128 rows with per-lag min/max boxes, a query visits its
+  *    leaves in ascending order of the box bound lb = Σ_j gap_j², and
+  *    stops at the first leaf with lb > the k-th distance once its
+  *    heap is full. lb folds in the same ascending-lag order as the
+  *    distance, and IEEE round-to-nearest is monotone, so lb is never
+  *    above a row's computed distance: a pruned row could not have
+  *    been admitted and the (distance, label) top-k is bit-identical
+  *    to a full scan. At sf0.1 the kernel computes 5.3% of the pairs a
+  *    full scan would for fc_knn, 5.3-6.7% per step for
+  *    fc_knn_recursive and 15% for fc_ann (SCALE.md, r16).
+  *
   *  - [[predictOneStepLsh]]: bucketed random-projection LSH similarity
   *    join for when the entity count itself is huge (query side too
   *    big to broadcast) — the classic distributed ANN path.
@@ -122,7 +136,7 @@ object KnnForecaster {
     val collected = sel.collect()
     guardExactEntities(collected.length.toLong, "knn predictOneStep")
     val qRows = collected.zipWithIndex.map { case (r, i) =>
-      (i.toLong, Array.tabulate(lags)(j => r.getDouble(nEntity + 1 + j)))
+      (i.toLong, 0, Array.tabulate(lags)(j => r.getDouble(nEntity + 1 + j)))
     }
     val qMeta = spark.createDataFrame(
       spark.sparkContext.parallelize(
@@ -130,60 +144,21 @@ object KnnForecaster {
           Row.fromSeq(r.toSeq.take(nEntity + 1) :+ i.toLong)
         }.toIndexedSeq, 1),
       StructType(sel.schema.fields.take(nEntity + 1) :+ StructField("__qid", LongType)))
-    (heapPass(spark, reduction, qRows, lags, k), qMeta)
+    (heapPass(spark, KnnScan.index(reduction, lags, KnnScan.OneGroup), qRows, k), qMeta)
   }
 
-  /** One bounded-heap distance pass of `qRows` (qid, state[lags])
-    * against the (f1..flags, __label) `reduction`: per-partition
-    * top-k heaps per query, merged into the globally ranked
-    * (__qid, __dist, __label, __nn) frame. */
+  /** One bounded-heap distance pass of `qRows` (qid, group, state)
+    * over the leaf `index` ([[KnnScan]]): per-partition top-k per
+    * query, merged into the globally ranked (__qid, __dist, __label,
+    * __nn) frame — __nn orders (distance, label), so the tied-distance
+    * candidates resolve deterministically. */
   private def heapPass(spark: org.apache.spark.sql.SparkSession,
-                       reduction: DataFrame, qRows: Array[(Long, Array[Double])],
-                       lags: Int, k: Int): DataFrame = {
+                       index: org.apache.spark.rdd.RDD[KnnScan.Segment],
+                       qRows: Array[(Long, Int, Array[Double])], k: Int): DataFrame = {
     val bq = spark.sparkContext.broadcast(qRows)
-    // per-partition bounded top-k per query: rows are buffered into a
-    // row-major block and scanned QUERY-OUTER over primitive state
-    // (see [[scanRun]]) — the query vector and its k-th threshold stay
-    // register/L1-hot across the block instead of a boxed
-    // PriorityQueue head deref per (row × query) pair. The per-query
-    // (distance, label) multiset is identical to the former per-row
-    // heap kernel's (r14 measured: −25% process-CPU on fc_elite_knn).
-    val partials = reduction.rdd.mapPartitions { it =>
-      val qs = bq.value
-      val nq = qs.length
-      val dA = new Array[Array[Double]](nq)
-      val lA = new Array[Array[Double]](nq)
-      val cnt = new Array[Int](nq)
-      val maxI = new Array[Int](nq)
-      var qa = 0
-      while (qa < nq) {
-        dA(qa) = new Array[Double](k); lA(qa) = new Array[Double](k); qa += 1
-      }
-      val B = 256
-      val featBuf = new Array[Double](B * lags)
-      val labBuf = new Array[Double](B)
-      var n = 0
-      def flush(): Unit = {
-        var qi = 0
-        while (qi < nq) {
-          val packed = scanRun(featBuf, labBuf, 0, n, lags, k, qs(qi)._2,
-            dA(qi), lA(qi), cnt(qi), maxI(qi))
-          cnt(qi) = (packed >>> 32).toInt; maxI(qi) = packed.toInt
-          qi += 1
-        }
-        n = 0
-      }
-      it.foreach { row =>
-        val base = n * lags
-        var i = 0
-        while (i < lags) { featBuf(base + i) = row.getDouble(i); i += 1 }
-        labBuf(n) = row.getDouble(lags)
-        n += 1
-        if (n == B) flush()
-      }
-      if (n > 0) flush()
-      (0 until nq).iterator.flatMap { qi =>
-        val c = cnt(qi); val d0 = dA(qi); val l0 = lA(qi); val qid = qs(qi)._1
+    val ctr = KnnScan.counters(spark.sparkContext)
+    val partials = index.mapPartitions { segs =>
+      KnnScan.scan(segs, bq.value, k, ctr).flatMap { case (qid, d0, l0, c) =>
         (0 until c).iterator.map(j => Row(qid, d0(j), l0(j)))
       }
     }
@@ -196,177 +171,47 @@ object KnnForecaster {
         Window.partitionBy("__qid").orderBy(col("__dist"), col("__label"))))
   }
 
-  /** Max-heap ordering for the bounded k-heaps: lexicographic
-    * (distance, label), so tied-distance candidates resolve
-    * deterministically instead of by partition scheduling order. */
-  private val heapOrd: Ordering[(Double, Double)] =
-    Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Double.TotalOrdering)
-
-  /** Index of the lexicographic (distance, label) maximum of the k
-    * primitive state entries — `java.lang.Double.compare` is the same
-    * total order [[heapOrd]] ranked the boxed heap by (NaN greatest,
-    * −0.0 < 0.0). Ties keep the lowest index; tied entries are
-    * value-identical pairs, so which one a later admission overwrites
-    * cannot change the surviving multiset. */
-  @inline private def topKMaxIdx(d0: Array[Double], l0: Array[Double],
-                                 k: Int): Int = {
-    var mi = 0; var i = 1
-    while (i < k) {
-      val c = java.lang.Double.compare(d0(i), d0(mi))
-      if (c > 0 || (c == 0 && java.lang.Double.compare(l0(i), l0(mi)) > 0)) mi = i
-      i += 1
-    }
-    mi
-  }
-
-  /** Scan rows [s, e) of the row-major block buffer for ONE query's
-    * bounded top-k state (d0/l0 arrays of size k, `cnt0` entries so
-    * far, `maxI0` the max index once full). The admission test is the
-    * boxed kernel's exact IEEE comparison (`d < max || (d == max &&
-    * label < maxLabel)`) against the current k-th entry, and every
-    * admitted row's distance comes from the same complete
-    * ascending-lag fold — the surviving (distance, label) multiset is
-    * bit-identical to the former PriorityQueue kernel's. Returns the
-    * updated (cnt << 32) | maxI. */
-  @inline private def scanRun(featBuf: Array[Double], labBuf: Array[Double],
-                              s: Int, e: Int, lags: Int, k: Int,
-                              q: Array[Double],
-                              d0: Array[Double], l0: Array[Double],
-                              cnt0: Int, maxI0: Int): Long = {
-    var c = cnt0; var mi = maxI0
-    var thrD = 0.0; var thrL = 0.0
-    if (c == k) { thrD = d0(mi); thrL = l0(mi) }
-    var r = s
-    while (r < e) {
-      val base = r * lags
-      var d = 0.0; var j = 0
-      while (j < lags) { val t = featBuf(base + j) - q(j); d += t * t; j += 1 }
-      val label = labBuf(r)
-      if (c < k) {
-        d0(c) = d; l0(c) = label; c += 1
-        if (c == k) {
-          mi = topKMaxIdx(d0, l0, k); thrD = d0(mi); thrL = l0(mi)
-        }
-      } else if (d < thrD || (d == thrD && label < thrL)) {
-        d0(mi) = d; l0(mi) = label
-        mi = topKMaxIdx(d0, l0, k); thrD = d0(mi); thrL = l0(mi)
-      }
-      r += 1
-    }
-    (c.toLong << 32) | mi.toLong
-  }
-
-  /** Multi-group twin of [[heapPass]]: corpus rows carry a trailing
-    * `__grp` int and serve ONLY their group's queries (`qRows` =
+  /** Multi-group twin of [[heapPass]]: the `index` groups corpus rows
+    * by their `__grp` int, and they serve ONLY their group's queries (`qRows` =
     * (qid, grp, state)), so one scan advances every active
     * (member × CV-slice) roll of the elite zoo's knn family at once —
-    * the scan cost is corpus-bound, and the per-row inner loop only
-    * runs over the row's own group's queries, so batching G rolls
-    * whose corpora union here costs ~1 scan of the union instead of G
-    * scans of the slices (and, decisively at bench scale, 1 Spark
-    * job per step instead of G jobs × a window-rank shuffle each).
-    * Identical distance fold, heap maintenance and (distance, label)
-    * tie-break as [[heapPass]]; qids must be globally unique across
-    * groups.
+    * the scan cost is corpus-bound, and each query only probes its own
+    * group's leaves, so batching G rolls whose corpora union here
+    * costs ~1 scan of the union instead of G scans of the slices (and,
+    * decisively at bench scale, 1 Spark job per step instead of G jobs
+    * × a window-rank shuffle each). Same [[KnnScan]] kernel as
+    * [[heapPass]]; qids must be globally unique across groups.
     *
     * Returns the per-query top-k MEAN directly. The per-partition
     * bounded heaps are combined DISTRIBUTED (r15 — VERDICT r14 #3):
-    * each partition emits ONE heapOrd-ascending candidate array per
-    * resident query, a reduceByKey merge keeps the k smallest per qid
-    * executor-side, and the driver receives exactly O(queries × k)
-    * doubles — the former collect shipped O(partitions × queries × k)
-    * candidate tuples, the one hot-path driver volume that grew with
-    * CLUSTER size rather than data size. Top-k-of-union equals the
-    * merge of per-partition top-ks under the same total (distance,
-    * label) order (ties are value-identical pairs), and the final
-    * mean sums ascending — bit-identical to the window-rank form
+    * each partition emits ONE (distance, label)-ascending candidate
+    * array per resident query, a reduceByKey merge keeps the k smallest
+    * per qid executor-side, and the driver receives exactly
+    * O(queries × k) doubles. Top-k-of-union equals the merge of
+    * per-partition top-ks under the same total (distance, label) order
+    * (ties are value-identical pairs), and the final mean sums
+    * ascending — bit-identical to the window-rank form
     * row_number().over(orderBy(dist, label)) ≤ k feeding avg. */
   private[operators] def heapPassMultiMerged(
-      reduction: DataFrame, qRows: Array[(Long, Int, Array[Double])],
-      lags: Int, k: Int): java.util.HashMap[Long, Double] = {
-    val spark = reduction.sparkSession
-    val bq = spark.sparkContext.broadcast(qRows)
-    val partials = reduction.rdd.mapPartitions { it =>
-      val qs = bq.value
-      val byGrp: scala.collection.Map[Int, Array[Int]] =
-        qs.indices.toArray.groupBy(i => qs(i)._2)
-      val empty = Array.empty[Int]
-      // primitive top-k state, allocated LAZILY: a partition holds one
-      // group's rows, so only that group's state materializes (an
-      // eager fill allocated total-queries heaps in EVERY task —
-      // measured as a dominant per-step cost at 9 groups × 1500
-      // entities × 288 tasks). Rows buffer into a row-major block and
-      // each same-group RUN is scanned query-outer ([[scanRun]]): the
-      // query vector and its k-th threshold stay register/L1-hot
-      // across the run instead of a boxed heap-head deref per pair
-      // (r14: −25% process-CPU on fc_elite_knn). Row order per query
-      // is the iterator order either way, so the surviving multiset —
-      // and every tie-break — is bit-identical to the boxed kernel's.
-      val nq = qs.length
-      val dA = new Array[Array[Double]](nq)
-      val lA = new Array[Array[Double]](nq)
-      val cnt = new Array[Int](nq)
-      val maxI = new Array[Int](nq)
-      val B = 256
-      val featBuf = new Array[Double](B * lags)
-      val labBuf = new Array[Double](B)
-      val grpBuf = new Array[Int](B)
-      var n = 0
-      def flush(): Unit = {
-        var s = 0
-        while (s < n) {
-          val g = grpBuf(s)
-          var e = s + 1
-          while (e < n && grpBuf(e) == g) e += 1
-          val grpQs = byGrp.getOrElse(g, empty)
-          var gi = 0
-          while (gi < grpQs.length) {
-            val qi = grpQs(gi)
-            var d0 = dA(qi)
-            if (d0 == null) {
-              d0 = new Array[Double](k); dA(qi) = d0
-              lA(qi) = new Array[Double](k)
-            }
-            val packed = scanRun(featBuf, labBuf, s, e, lags, k, qs(qi)._3,
-              d0, lA(qi), cnt(qi), maxI(qi))
-            cnt(qi) = (packed >>> 32).toInt; maxI(qi) = packed.toInt
-            gi += 1
-          }
-          s = e
+      index: org.apache.spark.rdd.RDD[KnnScan.Segment],
+      qRows: Array[(Long, Int, Array[Double])], k: Int): java.util.HashMap[Long, Double] = {
+    val sc = index.sparkContext
+    val bq = sc.broadcast(qRows)
+    val ctr = KnnScan.counters(sc)
+    val partials = index.mapPartitions { segs =>
+      KnnScan.scan(segs, bq.value, k, ctr).map { case (qid, d0, l0, c) =>
+        // ONE (distance, label)-ascending interleaved [d0,l0,d1,l1,…]
+        // array per (partition, qid) — the unit the combine merges
+        val idx = Array.range(0, c).sortBy(j => (d0(j), l0(j)))(
+          Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Double.TotalOrdering))
+        val packed = new Array[Double](2 * c)
+        var o = 0
+        while (o < c) {
+          packed(2 * o) = d0(idx(o)); packed(2 * o + 1) = l0(idx(o)); o += 1
         }
-        n = 0
-      }
-      it.foreach { row =>
-        val base = n * lags
-        var i = 0
-        while (i < lags) { featBuf(base + i) = row.getDouble(i); i += 1 }
-        labBuf(n) = row.getDouble(lags)
-        grpBuf(n) = row.getInt(lags + 1)
-        n += 1
-        if (n == B) flush()
-      }
-      if (n > 0) flush()
-      (0 until nq).iterator.flatMap { qi =>
-        val d0 = dA(qi)
-        if (d0 == null) Iterator.empty
-        else {
-          // ONE heapOrd-ascending interleaved [d0,l0,d1,l1,…] array per
-          // (partition, qid) — the unit the distributed combine merges
-          val c = cnt(qi); val l0 = lA(qi); val qid = qs(qi)._1
-          val idx = Array.range(0, c).sortBy(j => (d0(j), l0(j)))(
-            Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Double.TotalOrdering))
-          val packed = new Array[Double](2 * c)
-          var o = 0
-          while (o < c) {
-            packed(2 * o) = d0(idx(o)); packed(2 * o + 1) = l0(idx(o)); o += 1
-          }
-          Iterator((qid, packed))
-        }
+        (qid, packed)
       }
     }.reduceByKey(mergeTopK(_, _, k)).collect()
-    if (sys.env.contains("GRAFT_KNN_BATCH_DEBUG"))
-      System.err.println(s"[knn-combine] driver received ${partials.length} qids, " +
-        s"${partials.map(_._2.length / 2).sum} candidate pairs (k=$k)")
     // mean of the k (distance, label)-smallest labels, summed ascending
     // — the arrays arrive merged, ascending and already capped at k
     val out = new java.util.HashMap[Long, Double]()
@@ -380,7 +225,7 @@ object KnnForecaster {
     out
   }
 
-  /** Merge two heapOrd-ascending interleaved (distance, label) arrays,
+  /** Merge two (distance, label)-ascending interleaved arrays,
     * keeping the k smallest — associative and commutative as a
     * multiset operation (ties are value-identical pairs), so the
     * reduceByKey combine order cannot change the result. */
@@ -407,8 +252,9 @@ object KnnForecaster {
     * (ŷ_{h−1}, …) — one bounded-heap distance pass of the cached
     * reduction per step, with the per-entity means (one double per
     * entity per step) mediated through the driver like the rest of
-    * the broadcast-KNN path. fh sequential passes over ONE cached
-    * reduction; the per-step collected state is O(entities).
+    * the broadcast-KNN path. fh sequential probes of ONE cached
+    * [[KnnScan]] leaf index; the per-step collected state is
+    * O(entities).
     * [[predictOneStep]] stays the fh=1 fast path. */
   def predictRecursive(p: Panel, timeCol: String, freq: String, lags: Int,
                        k: Int, fh: Int, corpusFraction: Double = 1.0): DataFrame = {
@@ -419,9 +265,13 @@ object KnnForecaster {
       .na.drop(featureCols :+ p.value)
       .select((featureCols.map(c => col(c).cast("double")).toIndexedSeq :+
         col(p.value).cast("double").as("__label")): _*)
-      .cache()
+    // the leaf index is built once and probed fh times; the one job
+    // that counts its rows also materializes it
+    val index = KnnScan.index(reduction, lags, KnnScan.OneGroup)
+      .setName(s"knn leaf index (lags=$lags)")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     try {
-      require(reduction.limit(1).count() > 0,
+      require(index.aggregate(0L)(_ + _.rows, _ + _) > 0,
         s"knn recursive predict has no complete training rows (lags=$lags)")
       val nEntity = p.entityCols.length
       val tails = queryTails(p, timeCol, lags)
@@ -434,8 +284,8 @@ object KnnForecaster {
         Array.tabulate(lags)(j => r.getDouble(nEntity + 1 + j)))
       val preds = Array.ofDim[Double](fh, collected.length)
       (1 to fh).foreach { h =>
-        val qRows = states.zipWithIndex.map { case (s, i) => (i.toLong, s) }
-        val stepAvg = heapPass(spark, reduction, qRows, lags, k)
+        val qRows = states.zipWithIndex.map { case (s, i) => (i.toLong, 0, s) }
+        val stepAvg = heapPass(spark, index, qRows, k)
           .filter(col("__nn") <= k)
           .groupBy("__qid").agg(avg(col("__label")).as("__p"))
           .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -463,7 +313,7 @@ object KnnForecaster {
         .join(predDf, "__qid")
         .withColumn(timeCol, Forecasters.futureTime(freq))
         .select((p.entityCols ++ Seq(col(timeCol), col(p.value))): _*)
-    } finally reduction.unpersist(blocking = false)
+    } finally index.unpersist(blocking = false)
   }
 
   /** IVF-cell variant — the Spark-first analog of the reference's
@@ -540,11 +390,12 @@ object KnnForecaster {
     // frame here
     require(centMat.nonEmpty,
       s"knn one-step IVF has no complete training rows (lags=$lags)")
-    // within-cell search uses the SAME bounded-heap partition scan as
-    // the exact path (corpus rows visit only their own cell's query
-    // group) — materializing the cell join + a global window sort
-    // instead was 25× slower under cell skew (one popular centroid
-    // makes the join quadratic-ish, while the scan stays one pass)
+    // within-cell search uses the SAME kernel as the exact path, with
+    // each corpus row grouped by its nearest centroid (assigned while
+    // the index is built) so a query probes only its own cell's leaves
+    // — materializing the cell join + a global window sort instead was
+    // 25× slower under cell skew (one popular centroid makes the join
+    // quadratic-ish, while the scan stays one pass)
     val corpus = red.select((featureCols.map(c => col(c).cast("double")) :+
       col(p.value).cast("double").as("__label")): _*)
     val nEntity = p.entity.length
@@ -558,69 +409,9 @@ object KnnForecaster {
           Row.fromSeq(r.toSeq.take(nEntity + 1) :+ i.toLong)
         }.toIndexedSeq, 1),
       StructType(queries.schema.fields.take(nEntity + 1) :+ StructField("__qid", LongType)))
-    val bq = spark.sparkContext.broadcast(qRows)
-    val bc = spark.sparkContext.broadcast(centMat)
-    val partials = corpus.rdd.mapPartitions { it =>
-      val qs = bq.value
-      val cents = bc.value
-      // primitive per-query top-k state (the r14 scanRun conventions:
-      // same IEEE admission compare, same Double.compare max — the
-      // surviving multiset is bit-identical to the boxed heaps')
-      val nq = qs.length
-      val dA = Array.fill(nq)(new Array[Double](k))
-      val lA = Array.fill(nq)(new Array[Double](k))
-      val cnt = new Array[Int](nq)
-      val maxI = new Array[Int](nq)
-      // queries pre-grouped by cell: each training row visits ONLY its
-      // own cell's queries. The former flat scan with an inner cell
-      // guard still enumerated every (row × query) pair — O(rows ·
-      // entities) guard checks that put a 21-minute wall at 200k
-      // entities (KnnEntitySoak) on the path whose whole point is
-      // dodging that product. Same surviving pairs, ×nCells less work.
-      val byCell: scala.collection.Map[Int, Array[Int]] =
-        qs.indices.toArray.groupBy(i => qs(i)._2)
-      val empty = Array.empty[Int]
-      val feats = new Array[Double](lags)
-      val lab1 = new Array[Double](1)
-      it.foreach { row =>
-        var i = 0
-        while (i < lags) { feats(i) = row.getDouble(i); i += 1 }
-        lab1(0) = row.getDouble(lags)
-        // in-scan cell assignment against the broadcast centroid
-        // matrix — the shared [[nearestCell]] argmin (a top-level
-        // object method compiles to a static MODULE$ call, so the
-        // closure captures nothing). feats feeds scanRun directly —
-        // scanRun never mutates its block buffer (ADVICE r14: the old
-        // per-row arraycopy into a one-row staging buffer was dead
-        // work on the hot path).
-        val cellQs = byCell.getOrElse(nearestCell(feats, cents), empty)
-        var ci = 0
-        while (ci < cellQs.length) {
-          val qi = cellQs(ci)
-          val packed = scanRun(feats, lab1, 0, 1, lags, k, qs(qi)._3,
-            dA(qi), lA(qi), cnt(qi), maxI(qi))
-          cnt(qi) = (packed >>> 32).toInt; maxI(qi) = packed.toInt
-          ci += 1
-        }
-      }
-      (0 until nq).iterator.flatMap { qi =>
-        val c = cnt(qi); val d0 = dA(qi); val l0 = lA(qi); val qid = qs(qi)._1
-        (0 until c).iterator.map(j => Row(qid, d0(j), l0(j)))
-      }
-    }
-    val partialDf = spark.createDataFrame(partials, StructType(Seq(
-      StructField("__qid", LongType), StructField("__dist", DoubleType),
-      StructField("__label", DoubleType))))
-    val topk = partialDf
-      .withColumn("__nn", row_number().over(
-        Window.partitionBy("__qid").orderBy(col("__dist"), col("__label"))))
-      .filter(col("__nn") <= k)
-      .groupBy("__qid").agg(avg(col("__label")).as(p.value))
-    broadcast(qMeta)
-      .join(topk, "__qid")
-      .withColumn("__h", lit(1))
-      .withColumn(timeCol, Forecasters.futureTime(freq))
-      .select((p.entityCols ++ Seq(col(timeCol), col(p.value))): _*)
+    val cells = KnnScan.NearestCell(spark.sparkContext.broadcast(centMat))
+    finishOneStep(p, timeCol, freq,
+      heapPass(spark, KnnScan.index(corpus, lags, cells), qRows, k), qMeta, k)
   }
 
   /** RECURSIVE multi-horizon KNN over an IVF cell index — the scale
@@ -807,13 +598,18 @@ object KnnForecaster {
     * NaN distance never wins). Top-level so task closures reference it
     * through the module's static field instead of capturing an
     * enclosing method frame. */
-  private[graft] def nearestCell(feats: Array[Double], cents: Array[Array[Double]]): Int = {
+  private[graft] def nearestCell(feats: Array[Double], cents: Array[Array[Double]]): Int =
+    nearestCellAt(feats, 0, feats.length, cents)
+
+  /** [[nearestCell]] of the `lags` values of `buf` from `off`. */
+  private[graft] def nearestCellAt(buf: Array[Double], off: Int, lags: Int,
+                                   cents: Array[Array[Double]]): Int = {
     var bestD = Double.PositiveInfinity; var bestC = 0
     var c = 0
     while (c < cents.length) {
       val cent = cents(c)
       var d = 0.0; var j = 0
-      while (j < feats.length) { val t = feats(j) - cent(j); d += t * t; j += 1 }
+      while (j < lags) { val t = buf(off + j) - cent(j); d += t * t; j += 1 }
       if (d < bestD) { bestD = d; bestC = c }
       c += 1
     }
@@ -905,11 +701,6 @@ object KnnForecaster {
       .select((p.entityCols ++ Seq(col(timeCol), col(p.value))): _*)
   }
 
-  /** One row per entity: the newest lag-tail as lag columns + cutoff.
-    * No query id here — the broadcast path assigns one via
-    * zipWithIndex after the fact; a global row_number window would
-    * funnel the whole frame through a single partition, which the LSH
-    * (huge-entity) path must never do. */
   /** The exact broadcast path's scale assumption, made LOUD: it
     * collects one query row per entity to the driver and scans every
     * (training row × entity) pair per pass — O(rows · entities ·
@@ -930,6 +721,11 @@ object KnnForecaster {
         "buckets) at this scale, or raise KnnForecaster.maxExactEntities if " +
         "the driver is sized for it.")
 
+  /** One row per entity: the newest lag-tail as lag columns + cutoff.
+    * No query id here — the broadcast path assigns one via
+    * zipWithIndex after the fact; a global row_number window would
+    * funnel the whole frame through a single partition, which the LSH
+    * (huge-entity) path must never do. */
   private[operators] def queryTails(p: Panel, timeCol: String, lags: Int): DataFrame = {
     val tail = p.df
       .withColumn("__rn_desc", row_number().over(
@@ -939,11 +735,13 @@ object KnnForecaster {
       collect_list(struct(col("__rn_desc"), p.x)).as("__s"),
       max(col(timeCol)).as("__cutoff"))
       .withColumn("__state", sort_array(col("__s")).getField(p.value))
-      // a complete state also means NO null elements — collect_list
-      // keeps structs whose value field is null, and a null would NPE
-      // the driver-side getDouble on the collected tails
+      // a complete state also means NO null or NaN elements, like the
+      // corpus's na.drop — collect_list keeps structs whose value field
+      // is null, and a null would NPE the driver-side getDouble on the
+      // collected tails; a NaN makes every distance NaN, so the
+      // forecast would be whichever k rows the scan met first
       .filter(size(col("__state")) >= lags &&
-        !exists(col("__state"), x => x.isNull))
+        !exists(col("__state"), x => x.isNull || x.isNaN))
     (1 to lags).foldLeft(state) { (d, l) =>
       d.withColumn(s"${p.value}__lag_$l", element_at(col("__state"), l))
     }

@@ -2348,48 +2348,14 @@ object ConformalQueries {
 
     // exact KNN replicated: pooled AR-reduction training rows, squared
     // Euclidean distance to each entity's newest lag-tail (identical
-    // left-to-right fold), top-5 by distance, mean label. Ties on
-    // distance are label-identical in this data (continuous doubles),
-    // so the row_number cut matches the operator's bounded heaps.
-    "fc_knn" -> Q({
-      val fs = (1 to 7).map(j => s"lag(value, $j) OVER w AS f$j").mkString(", ")
-      val dist = (1 to 7).map(j => s"(t.f$j - q.q$j) * (t.f$j - q.q$j)")
-        .mkString("(", " + ", ")")
-      s"""WITH lagd AS (
-            SELECT user_id, ts, event_id, value, $fs
-            FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-          train AS (SELECT value AS label, f1, f2, f3, f4, f5, f6, f7
-                    FROM lagd WHERE f7 IS NOT NULL),
-          q AS (SELECT user_id, ts AS cutoff, value AS q1, f1 AS q2, f2 AS q3,
-                       f3 AS q4, f4 AS q5, f5 AS q6, f6 AS q7
-                FROM (SELECT *, row_number() OVER (PARTITION BY user_id
-                        ORDER BY ts DESC, event_id DESC) AS rd FROM lagd)
-                WHERE rd = 1 AND f6 IS NOT NULL),
-          topk AS (
-            SELECT user_id, cutoff, label,
-                   row_number() OVER (PARTITION BY user_id ORDER BY d) AS nn
-            FROM (SELECT q.user_id, q.cutoff, t.label, $dist AS d
-                  FROM q CROSS JOIN train t))
-          SELECT user_id, CAST(cutoff + INTERVAL '1 day' AS TIMESTAMP) AS ts,
-                 round(avg(label), 6) AS value
-          FROM topk WHERE nn <= 5 GROUP BY user_id, cutoff"""
-    }) { (s, dir) =>
-      r6(KnnForecaster.predictOneStep(ev(s, dir), "ts", "1d", lags = 7, k = 5))
-    },
+    // left-to-right fold), top-5 by (distance, label), mean label
+    "fc_knn" -> FuzzBuilders.fcKnn(lags = 7, k = 5),
 
     // RECURSIVE multi-horizon KNN (the reference's knn under the
     // base-forecaster recursion): horizon h's query vector prepends
     // ŷ_{h−1} to the shifted state; each step is a full distance
     // rank + top-5 mean, replicated as staged CROSS JOIN CTEs
-    "fc_knn_recursive" -> Q(
-      s"""WITH ${OlsBacktestSql.lagdCte(7)},
-          ${OlsBacktestSql.knnRecursiveCtes("kr", 7, k = 5, horizons = 3,
-        endRn = "cnt", trainCond = "TRUE")}
-          SELECT user_id, CAST(cutoff + h * INTERVAL '1 day' AS TIMESTAMP) AS ts,
-                 round(CASE h WHEN 1 THEN p1 WHEN 2 THEN p2 ELSE p3 END, 6) AS value
-          FROM fp_kr CROSS JOIN (SELECT unnest([1, 2, 3]) AS h)""") { (s, dir) =>
-      r6(KnnForecaster.predictRecursive(ev(s, dir), "ts", "1d", lags = 7, k = 5, fh = 3))
-    },
+    "fc_knn_recursive" -> FuzzBuilders.fcKnnRecursive(lags = 7, k = 5, fh = 3),
 
     // elite's knn members (elite.py:83-88, n_neighbors = lags//2 = 3):
     // recursive KNN plain, behind the z-score target transform, and

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.functions.{FeatureAggs, Features}
-import graft.operators.{CrossValidation, Forecasters, LinearForecaster, Metrics, Preprocess, Seasonality, Similarity}
+import graft.operators.{CrossValidation, Forecasters, KnnForecaster, LinearForecaster, Metrics, Preprocess, Seasonality, Similarity}
 import org.apache.spark.sql.functions._
 import Q._
 
@@ -516,6 +516,34 @@ object FuzzBuilders {
     val p = ev(s, dir)
     r6(LinearForecaster.fit(p, lags = lags, freq = "1d", regParam = ridge)
       .predict(p, "ts", fh = fh))
+  }
+
+  /** Exact one-step KNN over (lags, k): pooled AR-reduction rows, the
+    * squared distance folded in ascending lag order, top-k by
+    * (distance, label), mean label — the one-horizon case of the SAME
+    * [[OlsBacktestSql.knnRecursiveCtes]] chain as [[fcKnnRecursive]]
+    * (fc_knn pins lags 7, k 5). */
+  def fcKnn(lags: Int, k: Int): Q = Q(
+    s"""WITH ${OlsBacktestSql.lagdCte(lags)},
+        ${OlsBacktestSql.knnRecursiveCtes("fz", lags, k = k, horizons = 1,
+      endRn = "cnt", trainCond = "TRUE")}
+        SELECT user_id, CAST(cutoff + INTERVAL '1 day' AS TIMESTAMP) AS ts,
+               round(p1, 6) AS value
+        FROM fp_fz""") { (s, dir) =>
+    r6(KnnForecaster.predictOneStep(ev(s, dir), "ts", "1d", lags = lags, k = k))
+  }
+
+  /** Recursive multi-horizon KNN over (lags, k, fh): horizon h's query
+    * prepends ŷ_{h−1} to the shifted state (fc_knn_recursive pins lags
+    * 7, k 5, fh 3). */
+  def fcKnnRecursive(lags: Int, k: Int, fh: Int): Q = Q(
+    s"""WITH ${OlsBacktestSql.lagdCte(lags)},
+        ${OlsBacktestSql.knnRecursiveCtes("fz", lags, k = k, horizons = fh,
+      endRn = "cnt", trainCond = "TRUE")}
+        SELECT user_id, CAST(cutoff + h * INTERVAL '1 day' AS TIMESTAMP) AS ts,
+               round(${caseH(fh)}, 6) AS value
+        FROM fp_fz CROSS JOIN (SELECT unnest(${horizons(fh)}) AS h)""") { (s, dir) =>
+    r6(KnnForecaster.predictRecursive(ev(s, dir), "ts", "1d", lags = lags, k = k, fh = fh))
   }
 
   /** Elastic-net/lasso CD fit over (lags, α, l1Ratio, sweeps) via the

@@ -674,6 +674,8 @@ object OlsBacktestSql {
     * .predictRecursive]]: horizon h's query vector is (ŷ_{h−1}
     * prepended to the shifted state), each step a CROSS JOIN distance
     * rank + top-k mean — the oracle of the reference's recursive knn.
+    * Ranks break distance ties on the label, like the kernel's
+    * (distance, label) heap order.
     * `endRn`/`trainCond` parameterize the row prefix so the same
     * chain serves full fits (`cnt`/TRUE) and backtest splits.
     * `scaled` wraps the member in the per-entity z-score target
@@ -755,7 +757,7 @@ object OlsBacktestSql {
               FROM ${tag}_q${h - 1} q CROSS JOIN ${tag}_tr t)""",
         s"""${tag}_p$h AS (SELECT user_id, avg(label) AS p FROM (
               SELECT user_id, label,
-                     row_number() OVER (PARTITION BY user_id ORDER BY d) AS nn
+                     row_number() OVER (PARTITION BY user_id ORDER BY d, label) AS nn
               FROM ${tag}_d$h) WHERE nn <= $k GROUP BY user_id)""",
         s"""${tag}_q$h AS (SELECT q.user_id, q.cutoff$carryArtQ,
               ${shift.mkString(", ")}, ${carryPr.mkString(", ")}
