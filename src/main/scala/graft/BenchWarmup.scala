@@ -1,7 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Untimed warmup shared by [[Bench]] and [[BenchOne]]: JIT/codegen
+/** Untimed warmup shared by [[Bench]]'s graded and named modes: JIT/codegen
   * every heavy query family's generated-class shapes on tiny frames so
   * rep-1 of a timed query measures the engine, not Janino/C2 compile.
   * Generated-source shapes depend on the structural knobs (lag counts,
@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   * values (StableConst erases those), so a 384-row panel at the EXACT
   * registry configs warms the very classes the sf-scale run then pulls
   * from the enlarged codegen cache. r12 verdict #7: cold fc_elite_stack
-  * paid 22.4 s vs 6.2 s warm in an unwarmed BenchOne — the adjudication
+  * paid 22.4 s vs 6.2 s warm in an unwarmed named rep — the adjudication
   * tool must warm the same shapes the graded bench does. */
 object BenchWarmup {
   /** Run one warmup block, logging any failure to stderr instead of
@@ -31,7 +31,7 @@ object BenchWarmup {
     // count(): a bare count() is answered from parquet metadata and
     // leaves every DATA page unread — the first timed query then pays
     // the actual column IO + OS page-cache fill (the residual ~1.6x
-    // rep-1 premium BenchOne showed even with all codegen warm)
+    // rep-1 premium named reps showed even with all codegen warm)
     Seq("lineitem", "orders", "customer", "nation", "events", "documents", "embeddings")
       .foreach { t =>
         block(s"table-io $t") { graft.core.Tables(spark, sfDir, t).rdd.count() }
@@ -127,7 +127,7 @@ object BenchWarmup {
       // classes come from the cache either way, but the JVM's C2 tier
       // only compiles the generated loops after thousands of
       // invocations — a 384-row panel leaves rep-1 at sf-scale running
-      // C1/interpreted (the residual ~1.6x BenchOne rep-1 premium)
+      // C1/interpreted (the residual ~1.6x named-rep rep-1 premium)
       graft.operators.EliteDeep.run(stackPanel, "ts", "1d", fh = 3, topK = 4,
         testSize = 5, nSplits = 2, stepSize = 5, cdSweeps = 8, strategy = "lasso",
         stackAlpha = 0.01, stackSweeps = 10,
